@@ -4,10 +4,19 @@
 
 CPUS ?= 32
 
-.PHONY: test bench bench-sf1 oracle-sweep
+.PHONY: test tier1 perf bench bench-sf1 oracle-sweep
 
 test:
 	python -m pytest tests/ -x -q
+
+# the Tier-1 suite exactly as ROADMAP.md states it
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# every benchmark workload, untraced then traced (perfbench/README.md)
+perf:
+	python3 perfbench/run.py --workload all --seed 1 --seconds 12
 
 bench:
 	SPARK_GRAFT_CPUS=$(CPUS) python bench.py

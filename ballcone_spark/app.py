@@ -12,11 +12,13 @@ from __future__ import annotations
 
 import datetime
 import time
+from collections import defaultdict
 from typing import Any, Optional
 
 from pyspark.sql import functions as F
 
 from ballcone_spark.dao import SparkDAO
+from ballcone_spark.results import Average, AverageResult
 
 __all__ = ["days_before", "json_value", "Ballcone"]
 
@@ -64,7 +66,6 @@ class Ballcone:
             .where(F.col("date") == F.lit(day))
             .groupBy("service")
             .agg(F.count_distinct("ip").alias("unique"))
-            .orderBy(F.col("unique").desc(), "service")
             .collect()
         )
         present = {r["service"]: r["unique"] for r in rows}
@@ -74,54 +75,70 @@ class Ballcone:
         out.sort(key=lambda d: (-d["unique"], d["service"]))
         return out
 
-    # -- A2: service overview ------------------------------------------ #
+    # -- A2 + A4 + Q3: the service page ------------------------------- #
+
+    def service_page(
+        self, service: str, days: int = 7, stop: Optional[datetime.date] = None
+    ) -> dict[str, Any]:
+        """Every panel of the service page (reference WebBallcone.service,
+        web_ballcone.py:50) from one plan and one collect
+        (:meth:`SparkDAO.service_page_df`):
+
+        - ``overview``: {date: {visits, unique}} (A2);
+        - ``time``: the daily generation_time :class:`AverageResult` (Q3);
+        - ``paths`` / ``browsers``: the per-date top ``top_limit`` groups
+          by COUNT(ip), descending (A4 — Q5 with the web defaults,
+          reference web_ballcone.py:79-83, __main__.py:37)."""
+        start, stop = days_before(stop, days)
+        rows = self.dao.service_page_df(
+            service, start, stop, self.top_limit
+        ).collect()
+        # the result is bounded (days × (1 + 2·limit) rows): order it here
+        # rather than with a distributed sort
+        by_gid: dict[int, list] = defaultdict(list)
+        for r in sorted(rows, key=lambda r: (r["date"], r["row_number"])):
+            by_gid[r["gid"]].append(r)
+        days_rows = by_gid[SparkDAO.PAGE_DAY]
+
+        def top(gid: int) -> list[dict]:
+            return [
+                {"date": json_value(r["date"]), "group": r["group"], "count": r["count"]}
+                for r in by_gid[gid]
+            ]
+
+        return {
+            "overview": {
+                r["date"].isoformat(): {"visits": r["visits"], "unique": r["unique"]}
+                for r in days_rows
+            },
+            "time": AverageResult(
+                table=service,
+                field="generation_time",
+                elements=[
+                    Average(
+                        date=r["date"], avg=r["average"], sum=r["sum"],
+                        count=r["time_count"],
+                    )
+                    for r in days_rows
+                ],
+            ),
+            "paths": top(SparkDAO.PAGE_PATH),
+            "browsers": top(SparkDAO.PAGE_BROWSER),
+        }
 
     def overview(
         self, service: str, days: int = 7, stop: Optional[datetime.date] = None
     ) -> dict[str, dict[str, int]]:
-        """{date: {visits, unique}} for the window — ONE pass (the
-        reference merges two queries in Python, web_ballcone.py:61-73)."""
-        start, stop = days_before(stop, days)
-        rows = (
-            self.dao._apply_dates(self.dao.table(service), start, stop)
-            .groupBy("date")
-            .agg(
-                F.count("*").alias("visits"),
-                F.count_distinct("ip").alias("unique"),
-            )
-            .orderBy("date")
-            .collect()
-        )
-        return {
-            r["date"].isoformat(): {"visits": r["visits"], "unique": r["unique"]}
-            for r in rows
-        }
-
-    # -- A4: top-N ------------------------------------------------------ #
+        """{date: {visits, unique}} for the window (A2)."""
+        return self.service_page(service, days, stop)["overview"]
 
     def top_paths(self, service: str, days: int = 7, stop=None):
-        return self._top(service, "path", days, stop)
+        """Per-date top paths (A4)."""
+        return self.service_page(service, days, stop)["paths"]
 
     def top_browsers(self, service: str, days: int = 7, stop=None):
-        return self._top(service, "browser_name", days, stop)
-
-    def _top(self, service: str, group: str, days: int, stop):
-        """Q5 with the web defaults: field=ip, desc, limit=top_limit
-        (reference web_ballcone.py:79-83, __main__.py:37)."""
-        start, stop = days_before(stop, days)
-        result = self.dao.select_count_group(
-            service,
-            field="ip",
-            group=group,
-            start=start,
-            stop=stop,
-            ascending=False,
-            limit=self.top_limit,
-        )
-        return [
-            {"date": json_value(e.date), "group": e.group, "count": e.count}
-            for e in result.elements
-        ]
+        """Per-date top browsers (A4)."""
+        return self.service_page(service, days, stop)["browsers"]
 
     # -- Q6 console ------------------------------------------------------ #
 

@@ -39,6 +39,20 @@ Scale notes (the design target is a 1000-executor cluster over ~100 TB):
 - The per-day top-N (Q5 with limit) is the classic window row_number
   pattern; Spark ≥3.5 rewrites it to ``WindowGroupLimit`` which pushes the
   limit below the shuffle (each map task keeps only N rows per date).
+  One helper, :meth:`SparkDAO._top_n`, holds the ordering and the limit
+  for every caller.
+- The service page (:meth:`service_page_df`) is one plan, not five DAO
+  calls: ``GROUPING SETS ((date), (date, path), (date, browser_name))``
+  over one scan of the windowed service slice, the per-date top-N inside
+  the plan, one ``collect()``. The grouping sets become an ``Expand``
+  that emits each input row once per set; it runs on the map side before
+  the partial aggregation, so it multiplies only map-side CPU and the
+  shuffle stays O(days × groups) like any daily aggregate. The one
+  distinct count (unique ips) is keyed on ip only in the day set (the
+  key is NULL in the path/browser sets), so its extra (…, ip) shuffle is
+  O(days × ips), as in the overview query it replaces, not
+  O(days × groups × ips). The result is at most days × (1 + 2·limit)
+  rows.
 """
 
 from __future__ import annotations
@@ -50,7 +64,7 @@ import re
 import shutil
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException, ParseException
@@ -309,6 +323,14 @@ class SparkDAO:
             return df.where(F.col("date") <= F.lit(stop))
         return df
 
+    @staticmethod
+    def _by_date(daily: DataFrame) -> DataFrame:
+        """Order a one-row-per-date result by date. It holds O(days) rows,
+        so one task sorts it: a global ``orderBy`` would add a
+        range-partition exchange and its sampling job, two of the five
+        Spark jobs of a daily distinct count, for a handful of rows."""
+        return daily.coalesce(1).sortWithinPartitions("date")
+
     # -- Q2: ordered, limited scan ------------------------------------- #
 
     def select_df(
@@ -347,14 +369,12 @@ class SparkDAO:
         here as ``coalesce(sum, 0.0)`` inside the plan.
         """
         df = self._apply_dates(self.table(service), start, stop)
-        return (
-            df.groupBy("date")
-            .agg(
+        return self._by_date(
+            df.groupBy("date").agg(
                 F.avg(field).alias("average"),
                 F.coalesce(F.sum(field).cast("double"), F.lit(0.0)).alias("sum"),
                 F.count(field).alias("count"),
             )
-            .orderBy("date")
         )
 
     def select_average(self, service, field, start=None, stop=None) -> AverageResult:
@@ -384,7 +404,7 @@ class SparkDAO:
         agg = (
             F.count_distinct(F.col(field)) if field is not None else F.count("date")
         ).alias("count")
-        return df.groupBy("date").agg(agg).orderBy("date")
+        return self._by_date(df.groupBy("date").agg(agg))
 
     def select_count(self, service, field=None, start=None, stop=None) -> CountResult:
         rows = self.select_count_df(service, field, start, stop).collect()
@@ -417,14 +437,11 @@ class SparkDAO:
         - counted expression: ``field`` if given else the date column;
           DISTINCT only when ``distinct=True`` (asymmetric vs Q4 — that is
           the reference's behavior, dao.py:309-314).
-        - ordering: date, count ASC|DESC, group — ties on count break by
-          group ascending (dao.py:317-319). NULL groups sort last to match
-          DuckDB's default NULLS LAST (Spark's ASC default is NULLS FIRST,
-          so we pin it).
+        - ordering: date, then :meth:`_top_order` — count ASC|DESC, ties
+          broken by group ascending with NULLs last (dao.py:317-319).
         - limit: ROW_NUMBER() OVER (PARTITION BY date ORDER BY count, group)
-          filtered to ≤ limit, then re-sorted (dao.py:323-330). Spark ≥3.5
-          turns this into WindowGroupLimit: the per-date limit is applied
-          before the final shuffle.
+          filtered to ≤ limit, then re-sorted (dao.py:323-330); see
+          :meth:`_top_n`.
         """
         df = self._apply_dates(self.table(service), start, stop)
         counted = F.col(field) if field is not None else F.col("date")
@@ -433,17 +450,11 @@ class SparkDAO:
         )
         grouped = df.groupBy("date", F.col(group).alias("group")).agg(agg)
 
-        count_order = F.col("count").asc() if ascending else F.col("count").desc()
-        group_order = F.col("group").asc_nulls_last()
-
         if limit is not None:
-            w = Window.partitionBy("date").orderBy(count_order, group_order)
-            grouped = (
-                grouped.withColumn("row_number", F.row_number().over(w))
-                .where(F.col("row_number") <= limit)
-                .drop("row_number")
+            grouped = self._top_n(grouped, ["date"], ascending, limit).drop(
+                "row_number"
             )
-        return grouped.orderBy(F.col("date").asc(), count_order, group_order)
+        return grouped.orderBy(F.col("date").asc(), *self._top_order(ascending))
 
     def select_count_group(
         self,
@@ -468,6 +479,93 @@ class SparkDAO:
             elements=[
                 Count(date=r["date"], group=r["group"], count=r["count"]) for r in rows
             ],
+        )
+
+    @staticmethod
+    def _top_order(ascending: bool) -> list[Column]:
+        """The top-N order: ``count`` ASC|DESC, ties broken by ``group``
+        ascending with NULLs last (DuckDB's default; Spark's ASC default
+        is NULLS FIRST, so it is pinned)."""
+        count = F.col("count").asc() if ascending else F.col("count").desc()
+        return [count, F.col("group").asc_nulls_last()]
+
+    @classmethod
+    def _top_n(
+        cls, df: DataFrame, partition: list[str], ascending: bool, limit: int
+    ) -> DataFrame:
+        """The first ``limit`` rows of each ``partition`` under
+        :meth:`_top_order`, ranked 1.. in a ``row_number`` column. A
+        ``row_number`` ≤ k filter is what Spark ≥3.5 rewrites to
+        WindowGroupLimit, which applies the limit before the shuffle."""
+        w = Window.partitionBy(*partition).orderBy(*cls._top_order(ascending))
+        return df.withColumn("row_number", F.row_number().over(w)).where(
+            F.col("row_number") <= limit
+        )
+
+    # -- A2 + A4 + Q3: the whole service page --------------------------- #
+
+    #: ``grouping_id()`` of each grouping set of :meth:`service_page_df`
+    #: (bit set = column rolled up; columns date, path, browser_name).
+    PAGE_DAY, PAGE_PATH, PAGE_BROWSER = 0b011, 0b001, 0b010
+
+    def service_page_df(
+        self,
+        service: str,
+        start: Optional[datetime.date] = None,
+        stop: Optional[datetime.date] = None,
+        limit: int = 5,
+    ) -> DataFrame:
+        """Every panel of the service page from one scan (the reference
+        makes five DAO calls for it, web_ballcone.py:62-83).
+
+        One row per (``gid``, ``date``, ``group``), unordered; ``gid`` is
+        one of :attr:`PAGE_DAY`, :attr:`PAGE_PATH`, :attr:`PAGE_BROWSER`.
+
+        - ``PAGE_DAY`` rows: ``visits`` = COUNT(*) (:meth:`select_count`
+          without a field), ``unique`` = COUNT(DISTINCT ip)
+          (:meth:`select_count` on ip), and ``average``/``sum``/
+          ``time_count`` of generation_time (:meth:`select_average`);
+          ``group`` is NULL.
+        - ``PAGE_PATH``/``PAGE_BROWSER`` rows: the per-date top ``limit``
+          groups by ``count`` = COUNT(ip), i.e. :meth:`select_count_group`
+          with field=ip, descending, ``limit``; ``row_number`` is the
+          rank within the date.
+
+        See the module docstring for the plan's scale behaviour.
+        """
+        if limit < 1:
+            raise ValueError(f"limit must be >= 1, got {limit}")
+        df = self._apply_dates(self.table(service), start, stop)
+        gid = F.col("gid")
+        pages = (
+            df.groupingSets(
+                [["date"], ["date", "path"], ["date", "browser_name"]],
+                "date", "path", "browser_name",
+            )
+            .agg(
+                F.grouping_id().alias("gid"),
+                F.count("*").alias("visits"),
+                F.count_distinct(
+                    F.when(F.grouping_id() == self.PAGE_DAY, F.col("ip"))
+                ).alias("unique"),
+                F.count("ip").alias("count"),
+                F.avg("generation_time").alias("average"),
+                F.coalesce(
+                    F.sum("generation_time").cast("double"), F.lit(0.0)
+                ).alias("sum"),
+                F.count("generation_time").alias("time_count"),
+            )
+            .withColumn(
+                "group",
+                F.when(gid == self.PAGE_PATH, F.col("path")).when(
+                    gid == self.PAGE_BROWSER, F.col("browser_name")
+                ),
+            )
+        )
+        # a PAGE_DAY (gid, date) partition holds one row: rank 1 ≤ limit
+        return self._top_n(pages, ["gid", "date"], False, limit).select(
+            "gid", "date", "group", "row_number", "visits", "unique", "count",
+            "average", "sum", "time_count",
         )
 
     # -- Q6: raw SQL console ------------------------------------------- #

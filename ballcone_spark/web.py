@@ -26,6 +26,8 @@ deliberately thin — every piece of logic lives in (tested) ``app.py`` /
 Testability extension beyond the reference: the windowed routes accept
 ``days`` and ``stop=YYYY-MM-DD`` query params (the reference hardcodes
 "today", which makes goldens impossible); defaults match the reference.
+A malformed ``days``/``stop``/``day``/``limit`` (not a number or date,
+``days`` < 1, a window before year 1) is answered 400 with the reason.
 """
 
 from __future__ import annotations
@@ -44,6 +46,35 @@ from ballcone_spark.app import Ballcone, days_before, json_value
 __all__ = ["BallconeHTTPServer", "encode"]
 
 _VALID_SERVICE = re.compile(r"\A\w+\Z")  # reference core.py:15
+
+
+class _BadRequest(ValueError):
+    """A malformed query parameter: answered with 400 and its message."""
+
+
+def _int_param(
+    q: dict, name: str, default: Optional[int], minimum: Optional[int] = None
+) -> Optional[int]:
+    raw = q.get(name, [None])[0]
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        raise _BadRequest(f"{name} must be an integer, got {raw!r}") from None
+    if minimum is not None and value < minimum:
+        raise _BadRequest(f"{name} must be >= {minimum}, got {value}")
+    return value
+
+
+def _date_param(q: dict, name: str) -> Optional[datetime.date]:
+    raw = q.get(name, [None])[0]
+    if raw is None:
+        return None
+    try:
+        return datetime.date.fromisoformat(raw)
+    except ValueError:
+        raise _BadRequest(f"{name} must be a YYYY-MM-DD date, got {raw!r}") from None
 
 
 def encode(obj: Any) -> Any:
@@ -84,11 +115,12 @@ class _Handler(BaseHTTPRequestHandler):
         return self.app.dao.table_exists(service) if should_exist else True
 
     def _window(self, q: dict) -> tuple[datetime.date, datetime.date]:
-        days = int(q.get("days", [self.days])[0])
-        stop = (
-            datetime.date.fromisoformat(q["stop"][0]) if "stop" in q else None
-        )
-        return days_before(stop, days)
+        days = _int_param(q, "days", self.days, minimum=1)
+        stop = _date_param(q, "stop")
+        try:
+            return days_before(stop, days)
+        except OverflowError:  # the window starts before year 1
+            raise _BadRequest(f"days out of range, got {days}") from None
 
     # ------------------------------------------------------------------ #
 
@@ -124,15 +156,15 @@ class _Handler(BaseHTTPRequestHandler):
             if parts == ["nginx"]:
                 return self._nginx(q)
             return self._send(404, {"error": f"No such route: {url.path}"})
+        except _BadRequest as e:
+            return self._send(400, {"error": str(e)})
         except Exception as e:  # surface, don't hang the socket
             return self._send(500, {"error": str(e)})
 
     # -- handlers (reference web_ballcone.py names) --------------------- #
 
     def _root(self, q: dict):
-        dashboard = self.app.dashboard(
-            datetime.date.fromisoformat(q["day"][0]) if "day" in q else None
-        )
+        dashboard = self.app.dashboard(_date_param(q, "day"))
         self._send(
             200,
             {
@@ -147,23 +179,16 @@ class _Handler(BaseHTTPRequestHandler):
         if not self._check_service(service):
             return self._not_found(service)
         start, stop = self._window(q)
-        days = (stop - start).days + 1
+        page = self.app.service_page(
+            service, days=(stop - start).days + 1, stop=stop
+        )
         self._send(
             200,
             {
                 "current_page": "service",
                 "current_service": service,
                 "services": self.app.dao.tables(),
-                "overview": self.app.overview(service, days=days, stop=stop),
-                "time": encode(
-                    self.app.dao.select_average(
-                        service, "generation_time", start, stop
-                    )
-                ),
-                "paths": self.app.top_paths(service, days=days, stop=stop),
-                "browsers": self.app.top_browsers(
-                    service, days=days, stop=stop
-                ),
+                **encode(page),
             },
         )
 
@@ -187,7 +212,7 @@ class _Handler(BaseHTTPRequestHandler):
         field = q.get("distinct", [None])[0]
         distinct = bool(field)
         ascending = bool(q.get("ascending", [None])[0])
-        limit = int(q["limit"][0]) if "limit" in q else None
+        limit = _int_param(q, "limit", None)
         start, stop = self._window(q)
         res = self.app.dao.select_count_group(
             service,

@@ -3,9 +3,30 @@
 from __future__ import annotations
 
 import datetime
+import math
+
+from pyspark.sql import types as T
 
 from ballcone_spark.app import Ballcone, days_before, json_value
+from ballcone_spark.schema import ENTRY_SCHEMA
 from tests.conftest import DAY1, DAY2, GOLDEN_ENTRIES
+
+
+def _close(got, want) -> bool:
+    """Structural equality, floats to 1e-9 relative."""
+    if isinstance(want, float) and isinstance(got, float):
+        return math.isclose(got, want, rel_tol=1e-9)
+    if isinstance(want, dict):
+        return isinstance(got, dict) and got.keys() == want.keys() and all(
+            _close(got[k], want[k]) for k in want
+        )
+    if isinstance(want, (list, tuple)):
+        return (
+            isinstance(got, (list, tuple))
+            and len(got) == len(want)
+            and all(_close(g, w) for g, w in zip(got, want))
+        )
+    return got == want and type(got) is type(want)
 
 
 def test_days_before():
@@ -29,6 +50,113 @@ def test_dashboard(seeded_dao):
         {"service": "test", "unique": 1},
         {"service": "second", "unique": 0},
     ]
+
+
+def _entry(ts: str, path: str, ip: str, browser, gen_time) -> dict:
+    return {
+        **GOLDEN_ENTRIES[0],
+        "datetime": datetime.datetime.fromisoformat(ts),
+        "path": path,
+        "ip": ip,
+        "browser_name": browser,
+        "generation_time": gen_time,
+    }
+
+
+#: Three days of one service. 2020-03-01: with limit 2, /b, /c and /d
+#: tie at the boundary (/b wins on group asc) and so do Chrome, Safari
+#: and NULL (Chrome wins, NULL sorts last). 2020-03-02: every
+#: generation_time is NULL (written below). 2020-03-03: NULL is the top
+#: browser.
+PAGE_ENTRIES = [
+    _entry("2020-03-01 00:00:00", "/a", "10.0.0.1", "Firefox", 0.1),
+    _entry("2020-03-01 01:00:00", "/a", "10.0.0.2", "Firefox", 0.2),
+    _entry("2020-03-01 02:00:00", "/d", "10.0.0.1", None, 0.3),
+    _entry("2020-03-01 03:00:00", "/c", "10.0.0.3", "Chrome", 0.7),
+    _entry("2020-03-01 04:00:00", "/b", "10.0.0.3", "Safari", 1e-3),
+    _entry("2020-03-03 00:00:00", "/", "10.0.0.4", None, 2.5),
+    _entry("2020-03-03 01:00:00", "/", "10.0.0.4", None, 1 / 3),
+    _entry("2020-03-03 02:00:00", "/x", "10.0.0.5", "Opera", 0.0),
+]
+PAGE_NULL_TIME = [
+    _entry("2020-03-02 00:00:00", "/a", "10.0.0.1", "Firefox", None),
+    _entry("2020-03-02 01:00:00", "/b", "10.0.0.6", None, None),
+]
+
+
+def _append_nullable(dao, service: str, entries: list[dict]) -> None:
+    """Append rows with a NULL in a NOT NULL column, as a foreign writer
+    could leave them (``batch_insert_into`` enforces the schema)."""
+    from pyspark.sql import functions as F
+
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in ENTRY_SCHEMA.fields]
+    )
+    (
+        dao.spark.createDataFrame(entries, schema=schema)
+        .withColumn("service", F.lit(service))
+        .withColumn("date", F.to_date("datetime"))
+        .write.mode("append")
+        .partitionBy("service", "date")
+        .parquet(dao._data_dir)
+    )
+
+
+def _dao_panels(dao, service: str, start, stop, limit: int) -> dict:
+    """The service page's panels from the DAO's own single-panel calls."""
+    visits = dao.select_count(service, field=None, start=start, stop=stop)
+    unique = dao.select_count(service, field="ip", start=start, stop=stop)
+    assert [e.date for e in visits.elements] == [e.date for e in unique.elements]
+
+    def top(group):
+        res = dao.select_count_group(
+            service, field="ip", group=group, start=start, stop=stop,
+            ascending=False, limit=limit,
+        )
+        return [
+            {"date": e.date.isoformat(), "group": e.group, "count": e.count}
+            for e in res.elements
+        ]
+
+    return {
+        "overview": {
+            v.date.isoformat(): {"visits": v.count, "unique": u.count}
+            for v, u in zip(visits.elements, unique.elements)
+        },
+        "time": dao.select_average(service, "generation_time", start, stop),
+        "paths": top("path"),
+        "browsers": top("browser_name"),
+    }
+
+
+def test_service_page_equals_dao_panels(dao):
+    """Every panel of the one-plan service page equals the DAO's own
+    answer for it, on ties at the top-N boundary, a NULL group, a day
+    whose generation_time is all NULL and an empty window."""
+    dao.batch_insert_into("page", PAGE_ENTRIES)
+    _append_nullable(dao, "page", PAGE_NULL_TIME)
+    app = Ballcone(dao, top_limit=2)
+    stop = datetime.date(2020, 3, 3)
+    start, _ = days_before(stop, 7)
+
+    page = app.service_page("page", days=7, stop=stop)
+    want = _dao_panels(dao, "page", start, stop, limit=2)
+    assert _close(page, want), (page, want)
+    # the fixture exercises what it claims to
+    assert [p["group"] for p in page["paths"][:2]] == ["/a", "/b"]
+    assert [b["group"] for b in page["browsers"][:2]] == ["Firefox", "Chrome"]
+    assert page["browsers"][-2]["group"] is None  # top browser on 03-03
+    null_day = page["time"].elements[1]
+    assert (null_day.avg, null_day.sum, null_day.count) == (None, 0.0, 0)
+    # the old entry points are projections of the page
+    assert app.overview("page", days=7, stop=stop) == page["overview"]
+    assert app.top_paths("page", days=7, stop=stop) == page["paths"]
+    assert app.top_browsers("page", days=7, stop=stop) == page["browsers"]
+
+    empty_stop = datetime.date(2020, 2, 1)
+    empty = app.service_page("page", days=3, stop=empty_stop)
+    assert empty["overview"] == {} and empty["paths"] == empty["browsers"] == []
+    assert _close(empty, _dao_panels(dao, "page", *days_before(empty_stop, 3), 2))
 
 
 def test_overview_single_pass(seeded_dao):
@@ -216,16 +344,17 @@ def test_http_front_routes(seeded_dao):
             redirected = False
         assert redirected
 
-        # per-service page equals the handler composition
+        # per-service page: every panel equals the DAO's own answer
         st, svc = _get(port, f"/services/test?{win}")
         assert st == 200
-        assert svc["overview"] == app.overview(
-            "test", days=7, stop=datetime.date(2020, 1, 2)
+        want = _dao_panels(
+            seeded_dao, "test", datetime.date(2019, 12, 27),
+            datetime.date(2020, 1, 2), limit=app.top_limit,
         )
-        assert svc["paths"] == app.top_paths(
-            "test", days=7, stop=datetime.date(2020, 1, 2)
-        )
-        assert [e["date"] for e in svc["time"]["elements"]]
+        assert _close(
+            {k: svc[k] for k in want}, encode(want)
+        ), (svc, want)
+        assert svc["browsers"] and svc["time"]["elements"]
 
         # API envelopes: average / count / count_group match the DAO
         st, avg = _get(port, f"/services/test/average/generation_time?{win}")
@@ -281,5 +410,37 @@ def test_http_front_routes(seeded_dao):
         assert ng["ip_version"] == 4 and ng["error"] == []
         st, ng6 = _get(port, "/nginx?service=bad-name&ip=zzz")
         assert len(ng6["error"]) == 2 and ng6["ip_version"] is None
+    finally:
+        srv.shutdown()
+
+
+def test_http_bad_window_params_are_400(seeded_dao):
+    """A malformed window or limit parameter is the client's error: 400
+    with the reason, never a 500 with a raw Python message, and never a
+    silently empty window."""
+    from ballcone_spark.web import BallconeHTTPServer
+
+    srv = BallconeHTTPServer(Ballcone(seeded_dao)).start()
+    try:
+        bad = [
+            ("/services/test?days=abc", "days must be an integer"),
+            ("/services/test?days=1.5", "days must be an integer"),
+            ("/services/test?days=0", "days must be >= 1"),
+            ("/services/test/count/ip?days=-3", "days must be >= 1"),
+            ("/services/test/average/generation_time?days=99999999999",
+             "days out of range"),
+            ("/services/test?days=800000&stop=2020-01-02", "days out of range"),
+            ("/services/test?stop=2020-13-01", "stop must be a YYYY-MM-DD"),
+            ("/services/test/count_group/path?stop=yesterday",
+             "stop must be a YYYY-MM-DD"),
+            ("/services/test/count_group/path?limit=five", "limit must be"),
+            ("/?day=2020-01-32", "day must be a YYYY-MM-DD"),
+        ]
+        for path, message in bad:
+            st, err = _get(srv.port, path)
+            assert st == 400 and message in err["error"], (path, st, err)
+        # the edges of the valid range still answer
+        st, one = _get(srv.port, "/services/test?days=1&stop=2020-01-02")
+        assert st == 200 and list(one["overview"]) == ["2020-01-02"]
     finally:
         srv.shutdown()

@@ -175,6 +175,64 @@ def test_warehouse_date_filter_prunes_partitions(seeded_dao):
     assert has_partition_filters(df, "date")
 
 
+def test_daily_results_sort_in_one_task(seeded_dao):
+    """Daily count/average results hold one row per date: they are
+    sorted in one task, with no range-partition exchange and its
+    sampling job."""
+    for df in (
+        seeded_dao.select_count_df("test", "ip"),
+        seeded_dao.select_average_df("test", "generation_time"),
+    ):
+        p = plan_str(df)
+        assert "rangepartitioning" not in p and "Coalesce 1" in p, p
+
+
+def _jobs_in_group(sc, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a fresh job group."""
+    sc.setJobGroup(group, "plan gate")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store up to date
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_service_page_is_one_scan_and_fewer_jobs(seeded_dao):
+    """The service page is one plan: one parquet scan, pruned to the
+    service and the window's dates, and it runs fewer Spark jobs than
+    the four DAO calls it replaces (unique ips, average, top paths, top
+    browsers)."""
+    import datetime
+    import uuid
+
+    dao = seeded_dao
+    start, stop = datetime.date(2019, 12, 27), datetime.date(2020, 1, 2)
+    df = dao.service_page_df("test", start, stop, 5)
+    p = plan_str(df)
+    assert sum(1 for ln in p.splitlines() if "Scan parquet" in ln) == 1, p
+    assert has_partition_filters(df, "service")
+    assert has_partition_filters(df, "date")
+
+    def four_calls():
+        dao.select_count("test", field="ip", start=start, stop=stop)
+        dao.select_average("test", "generation_time", start, stop)
+        for group in ("path", "browser_name"):
+            dao.select_count_group(
+                "test", field="ip", group=group, start=start, stop=stop,
+                ascending=False, limit=5,
+            )
+
+    sc = dao.spark.sparkContext
+    tag = uuid.uuid4().hex
+    page = _jobs_in_group(
+        sc, f"page-{tag}",
+        lambda: dao.service_page_df("test", start, stop, 5).collect(),
+    )
+    calls = _jobs_in_group(sc, f"calls-{tag}", four_calls)
+    assert 1 <= page < calls, (page, calls)
+
+
 def test_events_filter_pushed_to_scan(spark):
     df = load_table(spark, SF, "events").where(
         F.col("event_type") == "purchase"
